@@ -64,35 +64,11 @@ def _load(spark: SparkSession, sf_dir: str, name: str,
 
 
 def _extracted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents + extraction arrays (shared prefix of several queries)."""
-    from texoo_spark.extract import extract_discard_udf
-    return (_load(spark, sf_dir, "documents")
-            .withColumn("doc", extract_discard_udf(F.col("text")))
-            .select("doc_id", "text", "doc.*"))
-
-
-def _extracted_docs_lean(spark: SparkSession, sf_dir: str,
-                         where=None) -> DataFrame:
-    """Lean variant for queries that never read token surfaces: no
-    tok_text through Arrow (EXTRACT_LEAN_SCHEMA, no HTML gate).
-    ``where`` (a Column) filters the scan BEFORE the extraction UDF so
-    subset lanes never pay full-table Python extraction (and skip the
-    parallelism-widening repartition — a filtered subset is small by
-    construction, so the extra exchange would only add a job)."""
-    from texoo_spark.extract import _extract_batch_lean
-    from pyspark.sql.functions import pandas_udf
-    from texoo_spark.schema import EXTRACT_LEAN_SCHEMA
-    from texoo_spark import textops
-
-    @pandas_udf(EXTRACT_LEAN_SCHEMA)
-    def lean_udf(texts: pd.Series) -> pd.DataFrame:
-        return _extract_batch_lean(texts, textops.DISCARD)
-
-    docs = _load(spark, sf_dir, "documents", widen=where is None)
-    if where is not None:
-        docs = docs.filter(where)
-    return (docs.withColumn("doc", lean_udf(F.col("text")))
-            .select("doc_id", "text", "doc.*"))
+    """documents + extraction columns (shared prefix of several queries;
+    no HTML gate). tok_text is derived JVM-side and pruned when unread."""
+    from texoo_spark.pipeline import extract_turns
+    return extract_turns(_load(spark, sf_dir, "documents"),
+                         strip_html_first=False)
 
 
 # ---------------------------------------------------------------------------
@@ -137,7 +113,7 @@ def q_extract_tokens(spark, sf_dir):
         return pd.Series([len(maxent_tokenize_pos(t or ""))
                           for t in texts])
 
-    rule = (_extracted_docs_lean(spark, sf_dir)
+    rule = (_extracted_docs(spark, sf_dir)
             .select(F.lit("rule").alias("lane"), "doc_id",
                     F.col("n_tokens").cast("long").alias("n_tokens")))
     docs = _load(spark, sf_dir, "documents")
@@ -151,21 +127,21 @@ def q_extract_newline_discard(spark, sf_dir):
     explicit sentence boundary (' end. Stop now.' -> 2 sentences with exact
     reconstruction); 'nl_discard' prepends 'Header line\\n' exercising the
     Newlines.DISCARD offset algebra end-to-end."""
-    from texoo_spark.extract import extract_discard_udf
+    from texoo_spark.pipeline import extract_turns
     docs = _load(spark, sf_dir, "documents")
-    two = (docs
-           .withColumn("t2", F.concat(F.col("text"), F.lit(" end. Stop now.")))
-           .withColumn("doc", extract_discard_udf(F.col("t2")))
-           .select(F.lit("two_sent").alias("variant"), "doc_id",
-                   F.col("doc.extracted_text").alias("extracted_text"),
-                   F.col("doc.n_sentences").cast("long").alias("n_sentences")))
-    nld = (docs
-           .withColumn("t3", F.concat(F.lit("Header line"), F.lit("\n"),
-                                      F.col("text")))
-           .withColumn("doc", extract_discard_udf(F.col("t3")))
-           .select(F.lit("nl_discard").alias("variant"), "doc_id",
-                   F.col("doc.extracted_text").alias("extracted_text"),
-                   F.col("doc.n_sentences").cast("long").alias("n_sentences")))
+
+    def variant(name: str, text) -> DataFrame:
+        return (extract_turns(docs.withColumn("text", text),
+                              strip_html_first=False)
+                .select(F.lit(name).alias("variant"), "doc_id",
+                        "extracted_text",
+                        F.col("n_sentences").cast("long")
+                        .alias("n_sentences")))
+
+    two = variant("two_sent", F.concat(F.col("text"),
+                                       F.lit(" end. Stop now.")))
+    nld = variant("nl_discard", F.concat(F.lit("Header line"), F.lit("\n"),
+                                         F.col("text")))
     return two.unionByName(nld)
 
 
@@ -468,7 +444,7 @@ def q_quality_scores(spark, sf_dir):
     The profile is persisted once so the routed union's branches filter
     a cache instead of re-running the UDF scan per branch."""
     from texoo_spark.annotator import Annotator, route_by_language
-    from texoo_spark.extract import detect_language_udf
+    from texoo_spark.langid import detect_language_udf
     from texoo_spark.udfs import fingerprint_udf
     docs = _load(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
@@ -522,7 +498,8 @@ def q_newline_segments(spark, sf_dir):
     a newline token (SectorAnnotator.applySectionsFromNewlines)."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
-    from texoo_spark.extract import extract_keep_udf
+    from texoo_spark import textops
+    from texoo_spark.pipeline import extract_turns
     from texoo_spark.segment import segments_from_newlines
 
     @pandas_udf(LongType())
@@ -541,19 +518,19 @@ def q_newline_segments(spark, sf_dir):
         F.array_join(F.slice(words, 1, 5), " "), F.lit("\n"),
         F.array_join(F.slice(words, 6, 5), " "), F.lit("\n"),
         F.array_join(F.slice(words, 11, F.size(words) - 10), " "))
-    return (docs.filter(F.size(words) > 10)
-            .withColumn("doc", extract_keep_udf(three_part))
+    return (extract_turns(docs.filter(F.size(words) > 10)
+                          .withColumn("text", three_part),
+                          newlines=textops.KEEP, strip_html_first=False)
             .select("doc_id",
-                    n_segments(F.col("doc.tok_text"),
-                               F.col("doc.sent_tok_start"),
-                               F.col("doc.sent_tok_end")).alias("n_segments")))
+                    n_segments(F.col("tok_text"), F.col("sent_tok_start"),
+                               F.col("sent_tok_end")).alias("n_segments")))
 
 
 def q_max_overlap_token(spark, sf_dir):
     """R3 max-overlap join: for the probe char range [10, 40), the token
     with the largest overlap, per document."""
     from texoo_spark.conversation import max_overlap_join
-    toks = (_extracted_docs_lean(spark, sf_dir)
+    toks = (_extracted_docs(spark, sf_dir)
             .select("doc_id",
                     F.explode(F.arrays_zip("tok_begin", "tok_end")).alias("t"))
             .select("doc_id", F.col("t.tok_begin").alias("c_begin"),
@@ -943,8 +920,8 @@ def q_tagged_mentions(spark, sf_dir):
     initcap'd, so n_mentions = alphabetic first-3-word count), JOINED with
     the linking lane: first-word mentions against a broadcast alias table
     derived from the corpus vocabulary, top candidate = the word's entity."""
-    from texoo_spark.extract import extract_discard_udf
     from texoo_spark.linking import link_mentions
+    from texoo_spark.pipeline import extract_turns
     from texoo_spark.tagger import LinearTagger, tag_mentions
     docs = _load(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
@@ -952,8 +929,8 @@ def q_tagged_mentions(spark, sf_dir):
         F.initcap(F.array_join(F.slice(words, 1, 3), " ")), F.lit(" "),
         F.array_join(F.slice(words, 4, F.greatest(F.size(words) - 3,
                                                   F.lit(1))), " "))
-    extracted = (docs.withColumn("doc", extract_discard_udf(text2))
-                 .select("doc_id", "doc.*"))
+    extracted = extract_turns(docs.withColumn("text", text2),
+                              strip_html_first=False)
     tagged = (tag_mentions(extracted,
                            LinearTagger.capitalized_mention_baseline())
               .select("doc_id",
@@ -982,7 +959,7 @@ def q_tagged_mentions_trained(spark, sf_dir):
     tests/test_tagger.py). The oracle re-scores every token in SQL with
     the trained weights inlined (trigram weight maps + surface-pattern
     partials) and re-counts decoded spans."""
-    from texoo_spark.extract import extract_discard_udf
+    from texoo_spark.pipeline import extract_turns
     from texoo_spark.tagger import tag_mentions, train_conll_tagger
     # restrict to pure-alphabetic lowercase texts so the token surface
     # patterns stay within the three the oracle scores (guards against
@@ -994,8 +971,8 @@ def q_tagged_mentions_trained(spark, sf_dir):
         F.initcap(F.array_join(F.slice(words, 1, 3), " ")), F.lit(" "),
         F.array_join(F.slice(words, 4, F.greatest(F.size(words) - 3,
                                                   F.lit(1))), " "))
-    extracted = (docs.withColumn("doc", extract_discard_udf(text2))
-                 .select("doc_id", "doc.*"))
+    extracted = extract_turns(docs.withColumn("text", text2),
+                              strip_html_first=False)
     tagger, _enc = train_conll_tagger()
     tagged = tag_mentions(extracted, tagger)
     return tagged.select(
@@ -1022,7 +999,7 @@ def q_tokens_in_range(spark, sf_dir):
         z, lambda t: ((t["tok_begin"] <= b) & (t["tok_end"] > b))
         | ((t["tok_begin"] >= b) & (t["tok_end"] <= e))
         | ((t["tok_begin"] < e) & (t["tok_end"] >= e))))
-    ranges = (_extracted_docs_lean(spark, sf_dir)
+    ranges = (_extracted_docs(spark, sf_dir)
               .select("doc_id", enclosed.cast("long").alias("n_enclosed"),
                       expand.cast("long").alias("n_expand")))
     docs = _load(spark, sf_dir, "documents")
@@ -1054,7 +1031,7 @@ def q_span_matches(spark, sf_dir):
       span; overlap join counts pred tokens intersecting any gold pair.
 
     One extraction pass feeds both join shapes; per-doc counts joined."""
-    toks = (_extracted_docs_lean(spark, sf_dir)
+    toks = (_extracted_docs(spark, sf_dir)
             .select("doc_id", F.posexplode(
                 F.arrays_zip("tok_begin", "tok_end")).alias("i", "t"))
             .select("doc_id", "i", F.col("t.tok_begin").alias("begin"),
@@ -1518,7 +1495,7 @@ def q_serializer_roundtrip(spark, sf_dir):
     from texoo_spark.serializer import (extracted_to_documents,
                                         read_documents_json,
                                         write_documents_json)
-    docs = (_extracted_docs_lean(spark, sf_dir)
+    docs = (_extracted_docs(spark, sf_dir)
             .select(F.col("doc_id").cast("string").alias("conv_id"),
                     F.lit(0).alias("turn_idx"),
                     F.lit("user").alias("role"),
@@ -1637,15 +1614,15 @@ def q_tagged_mentions_neural(spark, sf_dir):
     semantics are pytest-gated (architecture shapes, fixture goldens,
     V1 span-F1 under MentionAnnotatorEvaluation STRONG matching)."""
     from texoo_spark.bilstm import tag_mentions_neural
-    from texoo_spark.extract import extract_discard_udf
+    from texoo_spark.pipeline import extract_turns
     docs = _load(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     words = F.split(F.col("text"), " ")
     text2 = F.concat(
         F.initcap(F.array_join(F.slice(words, 1, 3), " ")), F.lit(" "),
         F.array_join(F.slice(words, 4, F.greatest(F.size(words) - 3,
                                                   F.lit(1))), " "))
-    extracted = (docs.withColumn("doc", extract_discard_udf(text2))
-                 .select("doc_id", "doc.*"))
+    extracted = extract_turns(docs.withColumn("text", text2),
+                              strip_html_first=False)
     tagged = tag_mentions_neural(extracted)
     return (tagged.select("doc_id",
                           F.size("m_begin").cast("long").alias("n_mentions"))

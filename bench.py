@@ -3,10 +3,10 @@ local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
 
 Primary metric (BASELINE.json): turns/sec through the full extraction batch
 job — read transcript parquet -> hash(conv_id) bucketing with turn-block
-salting -> fused HTML-strip+segmentation pandas UDF -> stable
-(conv_id, turn_idx) sort within partitions -> parquet write. The input table
-is generated deterministically ONCE on disk (untimed), per the BASELINE
-bench protocol; a warm-up run is excluded.
+salting -> stable (conv_id, turn_idx) sort within partitions -> fused
+HTML-strip+segmentation mapInArrow (arrow_extract) -> parquet write. The
+input table is generated deterministically ONCE on disk (untimed), per the
+BASELINE bench protocol; a warm-up run is excluded.
 
 Scaling-efficiency evidence (N vs 4N cores) comes from tools/scaling_bench.py
 and is recorded in BENCH/BASELINE.md.
@@ -31,9 +31,10 @@ SCRATCH = os.environ.get("TEXOO_BENCH_SCRATCH",
 
 BUCKETS = int(os.environ.get("TEXOO_BENCH_BUCKETS", "64"))
 
-# written output: tok_text is intentionally dropped — it is always
-# extracted_text[tok_begin:tok_end] (offset-faithful reconstruction), so
-# storing it would double the output bytes for zero information
+# written output: tok_text is intentionally dropped — token i is always
+# extracted_text[tok_begin[i] - tok_begin[0]:tok_end[i] - tok_begin[0]]
+# (offset-faithful reconstruction), so storing it would double the output
+# bytes for zero information
 OUT_COLUMNS = ["conv_id", "turn_idx", "role", "tool", "ts",
                "extracted_text", "n_sentences", "n_tokens",
                "tok_begin", "tok_end",

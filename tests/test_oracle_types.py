@@ -13,6 +13,8 @@ for the heavy queries) and fails if any output column has a widening
 type, making that class of bug structurally impossible to reintroduce.
 """
 
+import os
+
 import duckdb
 import pytest
 
@@ -20,6 +22,10 @@ import __spark_entry__ as entrymod
 from tools.check_oracles import TABLES, widened_columns
 
 SF_DIR = "/root/testdata/sf0.001"
+
+# the oracle views are defined over the bundled sf0.001 tables
+pytestmark = pytest.mark.skipif(not os.path.isdir(SF_DIR),
+                                reason=f"{SF_DIR} not present")
 
 
 @pytest.fixture(scope="module")

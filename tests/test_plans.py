@@ -99,13 +99,15 @@ def test_bm25_broadcasts_query_side(spark):
 
 
 def test_lean_extraction_single_python_hop(spark):
+    from texoo_spark.arrow_extract import EXTRACT_COLUMNS
     from texoo_spark.pipeline import extract_turns
     df = spark.createDataFrame(
         [("c", 0, "user", "text here", None)],
         "conv_id string, turn_idx int, role string, text string, tool string")
-    plan = plan_of(extract_turns(df, lean=True))
+    plan = plan_of(extract_turns(df).select(*EXTRACT_COLUMNS))
     assert plan.count("ArrowEvalPython") == 1
-    assert "tok_text" not in plan  # lean schema never materializes surfaces
+    # unread token surfaces are pruned: never shipped, never derived
+    assert "tok_text" not in plan and "substring" not in plan
 
 
 def test_segmentation_metrics_partition_on_doc_not_single(spark):

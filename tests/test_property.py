@@ -69,6 +69,53 @@ def test_offsets_are_sane(text, mode):
         assert extracted[b - base:e - base] == t
 
 
+# batches for the extraction kernel: nulls, empty strings, ASCII control
+# separators (U+001C-U+001F, whitespace to Python), newline/tab/NBSP runs
+# and HTML-looking turns mixed into the text alphabets above
+_hostile = st.text(alphabet="ab. \t\n\xa0\x1c\x1d\x1e\x1f", max_size=120)
+_html = st.lists(st.sampled_from(
+    ["<p>", "</p>", "<div>", "</div>", "<a href='x'>", "</a>", "<nav>",
+     "</nav>", "<br>", "Some words here.", " more text ", "\n", "&amp;",
+     "Ünïcode — ok."]), max_size=25).map("".join)
+KERNEL_BATCH = st.lists(
+    st.one_of(st.none(), st.just(""), ANY_TEXT, _hostile, _html),
+    max_size=12)
+
+
+@SETTINGS
+@given(KERNEL_BATCH, st.sampled_from([textops.KEEP, textops.DISCARD]),
+       st.booleans())
+def test_kernel_matches_reference(texts, mode, strip_html_first):
+    """arrow_extract.extract_batch — the one extraction kernel — against
+    the reference twin textops.extract_arrays, row by row; token surfaces
+    must come back out of extracted_text at offset - tok_begin[0] (the
+    recipe extract_turns evaluates on the JVM)."""
+    import pyarrow as pa
+
+    from texoo_spark.arrow_extract import EXTRACT_COLUMNS, extract_batch
+    from texoo_spark.html import looks_like_html, strip_html
+    arrays = extract_batch(pa.array(texts, pa.string()), mode,
+                           strip_html_first)
+    got = pa.StructArray.from_arrays(arrays, names=EXTRACT_COLUMNS)
+    assert len(got) == len(texts)
+    for text, row in zip(texts, got.to_pylist()):
+        text = text or ""
+        if strip_html_first and looks_like_html(text):
+            text = strip_html(text)["main_text"]
+        toks, begins, ends, sents, extracted = textops.extract_arrays(
+            text, mode)
+        assert row == {
+            "extracted_text": extracted, "n_sentences": len(sents),
+            "n_tokens": len(toks), "tok_begin": begins, "tok_end": ends,
+            "sent_begin": [s[0] for s in sents],
+            "sent_end": [s[1] for s in sents],
+            "sent_tok_start": [s[2] for s in sents],
+            "sent_tok_end": [s[3] for s in sents]}
+        base = begins[0] if begins else 0
+        assert [extracted[b - base:e - base]
+                for b, e in zip(begins, ends)] == toks
+
+
 @SETTINGS
 @given(ANY_TEXT)
 def test_tokenize_covers_all_nonspace(text):

@@ -19,11 +19,13 @@ def spark():
 def test_normalize_alias_jvm_parity(spark):
     """The JVM normalization expression must agree with the Python twin
     on the shapes alias keys actually take: case, runs of mixed unicode
-    whitespace (incl. NBSP), leading/trailing space, diacritics."""
+    whitespace (incl. NBSP and the U+001C-U+001F separators that Python's
+    str.split treats as whitespace), leading/trailing space, diacritics."""
     from texoo_spark.linking import normalize_alias, normalize_alias_col
     cases = ["Paris", "  NEW   york ", "São Paulo", "a\tb\nc",
              "", "ALL CAPS  PHRASE", "tab\t\tsqueeze", "ümlaut Straße",
-             "no\u00a0break\u00a0space"]
+             "no\u00a0break\u00a0space", "fs\x1cgs\x1drs\x1eus\x1fend",
+             "\x1f lead", "trail \x1c"]
     df = spark.createDataFrame([(c,) for c in cases], "s string")
     got = [r.n for r in
            df.select(normalize_alias_col(F.col("s")).alias("n")).collect()]

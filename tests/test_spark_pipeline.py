@@ -35,6 +35,9 @@ def fixture_turns(spark):
         "Nearing the coast of Mexico, the depression attained its peak "
         "intensity with winds of 35 mph (55 km/h) and a minimum pressure "
         "of 1,007 mbar (29.7 inHg).",
+        # first token off offset 0: extracted_text starts at tok_begin[0]
+        "  Hello world. Leading spaces shift every offset.",
+        "\nLeading newline.\n\nThen a blank line.",
     ]
     for i, text in enumerate(strings):
         rows.append((f"conv-{i % 3}", i, "user", text, None))
@@ -49,15 +52,18 @@ def test_per_turn_text_equality(spark, fixture_turns):
     from texoo_spark.pipeline import extract_turns
     out = extract_turns(fixture_turns, newlines=textops.DISCARD,
                         strip_html_first=False).collect()
-    assert len(out) == 7
+    assert len(out) == 9
     for row in out:
         expected = textops.extract_document(row.text, textops.DISCARD)
         assert row.extracted_text == expected.text, row.text[:40]
         assert row.n_sentences == len(expected.sentences)
         assert row.n_tokens == len(expected.tokens)
-        # offsets slice the extracted text back to the token surface
+        # offsets, rebased to the first token, slice the extracted text
+        # back to the reference token surfaces (tok_text is JVM-derived)
+        base = row.tok_begin[0] if row.tok_begin else 0
+        assert row.tok_text == [t.text for t in expected.tokens]
         for t, b, e in zip(row.tok_text, row.tok_begin, row.tok_end):
-            assert row.extracted_text[b:e] == t
+            assert row.extracted_text[b - base:e - base] == t
 
 
 def test_extract_keep_mode(spark, fixture_turns):
@@ -107,14 +113,14 @@ def test_run_extraction_resume(spark, fixture_turns, tmp_path_factory):
         .write.parquet(inp)
     r1 = run_extraction(spark, inp, outp, n_buckets=4, salt_buckets=2)
     assert r1["processed_parts"] >= 1
-    assert r1["n_turns"] == 7
+    assert r1["n_turns"] == 9
     r2 = run_extraction(spark, inp, outp, n_buckets=4, salt_buckets=2)
     assert r2["processed_parts"] == 0
     assert r2["skipped_parts"] == r1["processed_parts"]
     # manifest carries lineage + metrics
     mani = spark.read.parquet(os.path.join(outp, "_manifest")).collect()
     assert all(m.status == "done" for m in mani)
-    assert sum(m.n_turns for m in mani) == 7
+    assert sum(m.n_turns for m in mani) == 9
     assert all(m.input_path == inp for m in mani)
     # typed spans table written alongside (north_rule contract)
     spans = spark.read.parquet(os.path.join(outp, "spans"))
@@ -141,51 +147,76 @@ def test_gazetteer_udf_spark(spark):
     assert row.n == 8  # MatchingAnnotatorTest.testCaseSensitive
 
 
-def test_lean_extraction_matches_fat(spark, fixture_turns):
-    """EXTRACT_LEAN_SCHEMA output must equal the full output minus tok_text,
-    and tok_text must stay reconstructible as extracted_text[begin:end]."""
-    from texoo_spark.pipeline import extract_turns
-    fat = extract_turns(fixture_turns, lean=False).collect()
-    lean = extract_turns(fixture_turns, lean=True).collect()
-    fat_by_key = {(r.conv_id, r.turn_idx): r for r in fat}
-    assert len(lean) == len(fat)
-    for r in lean:
-        f = fat_by_key[(r.conv_id, r.turn_idx)]
-        assert r.extracted_text == f.extracted_text
-        assert r.n_tokens == f.n_tokens
-        assert r.n_sentences == f.n_sentences
-        assert r.tok_begin == f.tok_begin
-        assert r.tok_end == f.tok_end
-        assert r.sent_begin == f.sent_begin
-        assert r.sent_end == f.sent_end
-        assert r.sent_tok_start == f.sent_tok_start
-        assert r.sent_tok_end == f.sent_tok_end
-        # reconstruction invariant: token surfaces derive from offsets
-        for txt, b, e in zip(f.tok_text, r.tok_begin, r.tok_end):
-            assert r.extracted_text[b:e] == txt
-
-
 def test_arrow_lane_matches_pandas_lane(spark, fixture_turns):
-    """mapInArrow hot lane output must equal extract_turns(lean=True) on the
-    reference fixture strings, row for row, including order preservation."""
+    """Adapter vs adapter: the mapInArrow hot lane (extract_turns_arrow)
+    must equal extract_turns (the scalar arrow_udf) on the reference
+    fixture strings, row for row, including order preservation."""
     from pyspark.sql import functions as F
     from texoo_spark.arrow_extract import extract_turns_arrow
     from texoo_spark.pipeline import extract_turns, with_part_id
     src = (with_part_id(fixture_turns, n_buckets=4, salt_buckets=2)
            .withColumn("ts", F.lit(None).cast("timestamp")))
-    pandas_rows = {(r.conv_id, r.turn_idx): r
-                   for r in extract_turns(src, lean=True).collect()}
+    udf_rows = {(r.conv_id, r.turn_idx): r
+                for r in extract_turns(src).collect()}
     arrow_rows = extract_turns_arrow(
         src.sortWithinPartitions("conv_id", "turn_idx")).collect()
-    assert len(arrow_rows) == len(pandas_rows)
+    assert len(arrow_rows) == len(udf_rows)
     for r in arrow_rows:
-        p = pandas_rows[(r.conv_id, r.turn_idx)]
+        p = udf_rows[(r.conv_id, r.turn_idx)]
         assert r.extracted_text == p.extracted_text
         assert r.n_tokens == p.n_tokens and r.n_sentences == p.n_sentences
         assert r.tok_begin == p.tok_begin and r.tok_end == p.tok_end
         assert r.sent_begin == p.sent_begin and r.sent_end == p.sent_end
         assert (r.sent_tok_start == p.sent_tok_start
                 and r.sent_tok_end == p.sent_tok_end)
+
+
+# rows that break naive offset handling: nulls, empties, leading
+# whitespace, newline runs (DISCARD shifts offsets), tabs, NBSP, the
+# U+001C-U+001F separators, HTML, non-BMP characters
+HOSTILE = [None, "", "   ", "\n\n\n", "  Hello world.", "\nHeader\n\nBody.",
+           "a\tb\u00a0c. Next one!", "x\x1cy\x1dz\x1e. w\x1fv",
+           "<html><body><p>Main paragraph with enough words to be kept as "
+           "content by the boilerplate classifier here.</p></body></html>",
+           "emoji \U0001F600 after. \u00e9t\u00e9 \u2014 done",
+           "Dr. Smith (b. 1970) said: \"no\"\n\n\n\nEnd."]
+
+
+@pytest.mark.parametrize("mode", [textops.KEEP, textops.DISCARD])
+def test_adapters_match_reference_on_hostile_rows(spark, mode):
+    """Both adapters of the extraction kernel on fixed hostile rows: the
+    offsets and extracted text equal the reference twin
+    (textops.extract_arrays, after the same HTML strip), and the JVM-side
+    tok_text of extract_turns equals the reference token surfaces."""
+    from pyspark.sql import functions as F
+    from texoo_spark.arrow_extract import extract_turns_arrow
+    from texoo_spark.html import looks_like_html, strip_html
+    from texoo_spark.pipeline import extract_turns
+    df = (spark.createDataFrame(
+        [("c", i, "user", t, None, 0) for i, t in enumerate(HOSTILE)],
+        "conv_id string, turn_idx int, role string, text string,"
+        " tool string, part_id int")
+        .withColumn("ts", F.lit(None).cast("timestamp")))
+    by_udf = {r.turn_idx: r for r in
+              extract_turns(df, newlines=mode).collect()}
+    by_map = {r.turn_idx: r for r in
+              extract_turns_arrow(df, newlines=mode).collect()}
+    assert sorted(by_udf) == sorted(by_map) == list(range(len(HOSTILE)))
+    for i, text in enumerate(HOSTILE):
+        text = text or ""
+        if looks_like_html(text):
+            text = strip_html(text)["main_text"]
+        toks, begins, ends, sents, extracted = textops.extract_arrays(
+            text, mode)
+        u, m = by_udf[i], by_map[i]
+        assert u.tok_text == toks, i
+        for r in (u, m):
+            assert r.extracted_text == extracted, i
+            assert r.n_tokens == len(toks) and r.n_sentences == len(sents)
+            assert r.tok_begin == begins and r.tok_end == ends
+            assert [tuple(s) for s in zip(r.sent_begin, r.sent_end,
+                                          r.sent_tok_start,
+                                          r.sent_tok_end)] == sents
 
 
 def test_run_extraction_arrow_lane(spark, fixture_turns, tmp_path_factory):
@@ -310,7 +341,7 @@ def test_run_extraction_table_log_sink(spark, fixture_turns,
     rp = run_extraction(spark, inp, plain, n_buckets=4, salt_buckets=2)
     r1 = run_extraction(spark, inp, versioned, n_buckets=4, salt_buckets=2,
                         table_log=True)
-    assert r1["n_turns"] == rp["n_turns"] == 7
+    assert r1["n_turns"] == rp["n_turns"] == 9
     turns_t = TableLog(os.path.join(versioned, "turns"))
     # identical rows to the plain sink
     key = ["conv_id", "turn_idx"]
@@ -329,7 +360,7 @@ def test_run_extraction_table_log_sink(spark, fixture_turns,
     mani_t = TableLog(os.path.join(versioned, "_manifest"))
     mani = mani_t.read(spark).collect()
     assert all(m.status == "done" for m in mani)
-    assert sum(m.n_turns for m in mani) == 7
+    assert sum(m.n_turns for m in mani) == 9
     assert TableLog(os.path.join(versioned, "spans")).read(spark).count() \
         == spark.read.parquet(os.path.join(plain, "spans")).count()
     shutil.rmtree(base, ignore_errors=True)

@@ -30,7 +30,8 @@ def main(argv: list[str] | None = None) -> None:
                    help="reprocess all partitions even if manifested")
     p.add_argument("--arrow", action="store_true",
                    help="mapInArrow hot lane: no token surfaces stored "
-                        "(reconstruct via extracted_text[tok_begin:tok_end])")
+                        "(token i is extracted_text[tok_begin[i] - "
+                        "tok_begin[0]:tok_end[i] - tok_begin[0]])")
     p.add_argument("--master", default=None,
                    help="override master (defaults to spark-submit's)")
     args = p.parse_args(argv)

@@ -17,7 +17,8 @@ Output main text joins kept blocks with '\n' so the downstream sentence
 detector (textops) treats block boundaries as sentence breaks — spans stay
 offset-faithful to the extracted text.
 
-Pure Python, deterministic; wrapped in a pandas UDF (strip_html_udf).
+Pure Python, deterministic; the extraction kernel (arrow_extract.py)
+calls it per turn, and udfs.strip_html_text_udf wraps it for SQL use.
 """
 
 from __future__ import annotations

@@ -36,6 +36,10 @@ from __future__ import annotations
 import math
 import re
 
+import pandas as pd
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import StringType
+
 # explicit letter classes shared VERBATIM with the SQL oracle twin — both
 # engines must segment words identically (a broad \w would drag in
 # engine-specific unicode tables)
@@ -930,3 +934,8 @@ def detect_language(text: str) -> str:
     if best < EVIDENCE_FLOOR_MILLI * len(tris):
         return ""
     return langs[bi]
+
+
+@pandas_udf(StringType())
+def detect_language_udf(texts: pd.Series) -> pd.Series:
+    return texts.fillna("").map(detect_language)

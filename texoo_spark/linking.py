@@ -29,8 +29,11 @@ def normalize_alias_col(col: "F.Column") -> "F.Column":
     """normalize_alias as a JVM expression (lower + unicode-whitespace
     squeeze + trim) — the A13 hot path stays whole-stage-codegen'd with
     no Python worker; parity with the Python twin is test-pinned
-    (tests/test_spark_ops.py::test_normalize_alias_jvm_parity)."""
-    return F.trim(F.regexp_replace(F.lower(col), r"(?U)\s+", " "))
+    (tests/test_spark_ops.py::test_normalize_alias_jvm_parity). Python's
+    str.split also splits on the U+001C-U+001F separators, which Java's
+    \\s does not match, so the class names them explicitly."""
+    return F.trim(F.regexp_replace(F.lower(col), r"(?U)[\s\x1c-\x1f]+",
+                                   " "))
 
 
 def link_mentions(mentions: DataFrame, aliases: DataFrame,

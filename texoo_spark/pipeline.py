@@ -8,8 +8,9 @@ Scale design (BASELINE north_rule):
 - per-partition manifests make the job resumable: completed part_ids are
   anti-joined away on restart; each manifest row carries lineage (input
   path, code version) and metrics (turn/token/sentence counts);
-- all text work happens in Arrow-batched pandas UDFs; everything else is
-  built-in Catalyst operators (filters push down to the parquet scan).
+- all text work happens in one Arrow-batched kernel
+  (arrow_extract.extract_batch); everything else is built-in Catalyst
+  operators (filters push down to the parquet scan).
 """
 
 from __future__ import annotations
@@ -17,11 +18,14 @@ from __future__ import annotations
 import datetime
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.functions import arrow_udf
 
 from texoo_spark import textops
-from texoo_spark.extract import extract_udf
-from texoo_spark.schema import MANIFEST_SCHEMA
+from texoo_spark.arrow_extract import (EXTRACT_COLUMNS, extract_batch,
+                                       extract_turns_arrow)
+from texoo_spark.schema import EXTRACT_LEAN_SCHEMA, MANIFEST_SCHEMA
 
 CODE_VERSION = "texoo-spark-0.1"
 
@@ -44,30 +48,36 @@ def with_part_id(df: DataFrame, n_buckets: int,
 
 
 def extract_turns(df: DataFrame, newlines: str = textops.DISCARD,
-                  strip_html_first: bool = True,
-                  lean: bool = False) -> DataFrame:
+                  strip_html_first: bool = True) -> DataFrame:
     """text -> (extracted_text, token/sentence offset arrays) per turn.
 
-    When strip_html_first is set, HTML-looking turns are boilerplate-stripped
-    before segmentation inside the SAME pandas UDF (one ArrowEvalPython
-    node, one Arrow round-trip per batch); extraction offsets are relative
-    to the cleaned text, which IS the extracted-text contract.
+    One scalar arrow_udf over ``text`` runs the extraction kernel
+    (arrow_extract.extract_batch), so only ``text`` crosses into Python
+    and the plan has exactly one ArrowEvalPython node. When
+    strip_html_first is set, HTML-looking turns are boilerplate-stripped
+    inside that same call; offsets are relative to the cleaned text, which
+    IS the extracted-text contract.
 
-    lean=True drops the tok_text array from the UDF output (it is always
-    extracted_text[tok_begin:tok_end] by the reconstruction invariant),
-    halving Arrow transfer + downstream sort/write bytes — use for bulk
-    jobs whose sink does not store token surfaces."""
-    from texoo_spark.extract import pipeline_lean_udf, pipeline_udf
-    if lean and strip_html_first:
-        udf = pipeline_lean_udf(newlines)
-    elif strip_html_first:
-        udf = pipeline_udf(newlines)
-    else:
-        udf = extract_udf(newlines)
-    return (df
-            .withColumn("doc", udf(F.col("text")))
-            .select("*", "doc.*")
-            .drop("doc"))
+    Output: the input columns plus EXTRACT_COLUMNS, with ``tok_text``
+    after n_tokens. tok_text is derived on the JVM from the offsets
+    (extracted_text[b - tok_begin[0]:e - tok_begin[0]]), so Catalyst
+    prunes it — and its cost — when no consumer reads it."""
+
+    @arrow_udf(EXTRACT_LEAN_SCHEMA)
+    def extract(texts: pa.Array) -> pa.Array:
+        return pa.StructArray.from_arrays(
+            extract_batch(texts, newlines, strip_html_first),
+            names=EXTRACT_COLUMNS)
+
+    cols = [F.col(f"_x.{c}").alias(c) for c in EXTRACT_COLUMNS]
+    first = F.col("_x.tok_begin")[0]
+    tok_text = F.transform(
+        F.arrays_zip("_x.tok_begin", "_x.tok_end"),
+        lambda t: F.col("_x.extracted_text").substr(
+            t["tok_begin"] - first + 1, t["tok_end"] - t["tok_begin"]))
+    cols.insert(EXTRACT_COLUMNS.index("tok_begin"), tok_text.alias("tok_text"))
+    return (df.withColumn("_x", extract(F.col("text")))
+            .select(*df.columns, *cols))
 
 
 def run_extraction(spark: SparkSession, input_path: str, output_dir: str,
@@ -128,8 +138,7 @@ def run_extraction(spark: SparkSession, input_path: str, output_dir: str,
     clustered = df.repartition(max(len(pending_ids), 1), "part_id")
     if use_arrow:
         # hot lane: order established on slim rows, mapInArrow preserves it;
-        # token surfaces not stored (extracted_text[tok_begin:tok_end])
-        from texoo_spark.arrow_extract import extract_turns_arrow
+        # token surfaces not stored (see schema.EXTRACT_LEAN_SCHEMA)
         extracted = extract_turns_arrow(
             clustered.sortWithinPartitions("conv_id", "turn_idx"),
             newlines=newlines)

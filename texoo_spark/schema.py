@@ -24,25 +24,13 @@ TRANSCRIPT_SCHEMA = StructType([
     StructField("ts", TimestampType()),
 ])
 
-# Extraction UDF result: tokens/sentences as parallel arrays
-# (SURVEY.md §1.2-1.3; array-of-struct equivalent, chosen for Arrow speed).
-EXTRACT_SCHEMA = StructType([
-    StructField("extracted_text", StringType()),
-    StructField("n_sentences", IntegerType()),
-    StructField("n_tokens", IntegerType()),
-    StructField("tok_text", ArrayType(StringType())),
-    StructField("tok_begin", ArrayType(IntegerType())),
-    StructField("tok_end", ArrayType(IntegerType())),
-    StructField("sent_begin", ArrayType(IntegerType())),
-    StructField("sent_end", ArrayType(IntegerType())),
-    StructField("sent_tok_start", ArrayType(IntegerType())),
-    StructField("sent_tok_end", ArrayType(IntegerType())),
-])
-
-# Lean extraction result for the bulk pipeline: token texts are NOT shipped
-# (tok_text[i] == extracted_text[tok_begin[i]:tok_end[i]] by the
-# reconstruction invariant, WordHelpers.java:113-137), which cuts the Arrow
-# transfer + sort + parquet write volume roughly in half at ~55 tokens/turn.
+# Extraction kernel result (arrow_extract.extract_batch): tokens/sentences
+# as parallel offset arrays (SURVEY.md §1.2-1.3; array-of-struct
+# equivalent, chosen for Arrow speed). Token texts are NOT shipped:
+# extracted_text begins at offset tok_begin[0], so tok_text[i] ==
+# extracted_text[tok_begin[i] - tok_begin[0]:tok_end[i] - tok_begin[0]]
+# (the reconstruction invariant, WordHelpers.java:113-137);
+# pipeline.extract_turns derives it JVM-side.
 EXTRACT_LEAN_SCHEMA = StructType([
     StructField("extracted_text", StringType()),
     StructField("n_sentences", IntegerType()),
@@ -74,15 +62,6 @@ MATCH_SCHEMA = StructType([
     StructField("m_begin", ArrayType(IntegerType())),
     StructField("m_end", ArrayType(IntegerType())),
     StructField("m_label", ArrayType(StringType())),
-])
-
-# HTML boilerplate strip result.
-HTML_SCHEMA = StructType([
-    StructField("main_text", StringType()),
-    StructField("n_blocks", IntegerType()),
-    StructField("kept_blocks", IntegerType()),
-    StructField("link_chars", IntegerType()),
-    StructField("total_chars", IntegerType()),
 ])
 
 # Per-partition manifest for checkpoint/resume (BASELINE north_rule).

@@ -51,10 +51,6 @@ def sentence_embedding_batch(texts, dim: int = 64) -> np.ndarray:
     return out / norms
 
 
-def sentence_embedding(text: str, dim: int = 64) -> np.ndarray:
-    return sentence_embedding_batch([text], dim)[0]
-
-
 def embed_sentences(df: DataFrame, text_col: str = "sentence",
                     dim: int = 64) -> DataFrame:
     """Adds an `embedding` array<double> column — a narrow Arrow-batched

@@ -249,14 +249,6 @@ def matches(a_begin: int, a_end: int, b_begin: int, b_end: int,
     return intersects(a_begin, a_end, b_begin, b_end)
 
 
-def span_overlap_length(a_begin: int, a_end: int,
-                        b_begin: int, b_end: int) -> int:
-    """WordHelpers.getSpanOverlapLength (java:205-210)."""
-    b = max(a_begin, b_begin)
-    e = min(a_end, b_end)
-    return e - b if b < e else 0
-
-
 def spans_in_range(begins: list[int], ends: list[int], b: int, e: int,
                    enclosed: bool = True) -> list[int]:
     """Indices of spans in [b, e) with enclosed or boundary-expanding
@@ -272,15 +264,3 @@ def spans_in_range(begins: list[int], ends: list[int], b: int, e: int,
                     or (sb < e and se >= e)):
                 out.append(i)
     return out
-
-
-def max_overlap_index(begins: list[int], ends: list[int],
-                      b: int, e: int) -> int:
-    """Index of the span with largest char overlap with [b, e), or -1
-    (AnnotationHelpers.getAnnotationMaxOverlap semantics, java:56-65)."""
-    best, best_len = -1, 0
-    for i, (sb, se) in enumerate(zip(begins, ends)):
-        ov = span_overlap_length(sb, se, b, e)
-        if ov > best_len:
-            best, best_len = i, ov
-    return best

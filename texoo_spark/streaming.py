@@ -1,14 +1,13 @@
 """Structured Streaming variants of the extraction pipeline.
 
 The BASELINE job is batch-with-resume (partition manifests), but the same
-extraction UDFs compose with readStream for incremental ingest: new
-transcript files land, each micro-batch extracts and appends. Watermarked
-tumbling windows cover late-arriving turns for the metrics stream.
+extraction kernel composes with readStream for incremental ingest: new
+transcript files land, each micro-batch extracts and appends.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from texoo_spark.schema import TRANSCRIPT_SCHEMA
 
@@ -21,18 +20,6 @@ def stream_extract(spark: SparkSession, input_dir: str,
               .schema(TRANSCRIPT_SCHEMA)
               .parquet(input_dir))
     return extract_turns(stream, newlines=newlines)
-
-
-def stream_metrics(extracted: DataFrame,
-                   window: str = "1 hour",
-                   watermark: str = "2 hours") -> DataFrame:
-    """Watermarked tumbling-window throughput metrics over the stream."""
-    return (extracted
-            .withWatermark("ts", watermark)
-            .groupBy(F.window("ts", window).alias("win"), "role")
-            .agg(F.count("*").alias("n_turns"),
-                 F.sum("n_tokens").alias("n_tokens"),
-                 F.sum("n_sentences").alias("n_sentences")))
 
 
 def run_stream_once(spark: SparkSession, input_dir: str, output_dir: str,

@@ -1,7 +1,7 @@
 """Deterministic text segmentation core (no Spark imports).
 
 Reimplements the reference engine's extraction semantics as plain Python /
-regex routines designed to run inside vectorized pandas UDFs:
+regex routines designed to run inside Arrow-batched Python UDFs:
 
 - whitespace pre-tokenization with forced single-char tokens
   (ref: texoo-core/.../preprocess/TokenizerMENL.java:89-129)
@@ -17,8 +17,8 @@ regex routines designed to run inside vectorized pandas UDFs:
 - offset-faithful text reconstruction
   (ref: texoo-core/.../common/WordHelpers.java:113-137)
 
-Every function here is pure and deterministic; the Spark layer wraps them in
-Arrow-batched pandas UDFs (see extract.py).
+Every function here is pure and deterministic; the Spark layer calls them
+from one Arrow-batched kernel (see arrow_extract.py).
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Text analysis for training-data pipelines (net-new, BASELINE scope):
-language-ID, quality scoring, token counting, document fingerprinting.
+quality scoring and document fingerprinting.
 
 Pure deterministic functions; Spark-side these run as built-in SQL
 expressions where possible (see __spark_entry__.py oracles) and pandas UDFs
@@ -11,8 +11,6 @@ from __future__ import annotations
 import re
 
 _WS_TOKEN = re.compile(r"\S+")
-# BPE-ish word/number/punct pieces (GPT-2-style coarse pretokenizer shape)
-_BPE_TOKEN = re.compile(r"'(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?\d+| ?[^\sA-Za-z\d]+|\s+(?!\S)")
 _PUNCT = re.compile(r"[^\w\s]", re.UNICODE)
 _DIGIT = re.compile(r"\d")
 _WORD = re.compile(r"[a-z']+")
@@ -25,15 +23,6 @@ _EN_STOPWORDS = frozenset(
     "make than first been its who now people my made over did down only "
     "way find use may water long little very after words called just where "
     "most know".split())
-
-
-def whitespace_token_count(text: str) -> int:
-    return len(_WS_TOKEN.findall(text or ""))
-
-
-def bpe_ish_token_count(text: str) -> int:
-    """Deterministic proxy for subword token counts (regex pre-tokenizer)."""
-    return len(_BPE_TOKEN.findall(text or ""))
 
 
 def quality_scores(text: str) -> dict:

@@ -6,7 +6,7 @@ import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType, StringType
 
-from texoo_spark.schema import HTML_SCHEMA, MATCH_SCHEMA
+from texoo_spark.schema import MATCH_SCHEMA
 
 
 def _signed64(v: int) -> int:
@@ -20,12 +20,6 @@ def fingerprint_udf(texts: pd.Series) -> pd.Series:
     from texoo_spark.textquality import document_fingerprints_batch
     return pd.Series([_signed64(v)
                       for v in document_fingerprints_batch(texts)])
-
-
-@pandas_udf(HTML_SCHEMA)
-def strip_html_udf(texts: pd.Series) -> pd.DataFrame:
-    from texoo_spark.html import strip_html
-    return pd.DataFrame([strip_html(t or "") for t in texts])
 
 
 @pandas_udf(StringType())
