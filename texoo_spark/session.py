@@ -1,7 +1,9 @@
 """SparkSession factory with scale-oriented defaults.
 
-Designed for multi-executor clusters; tested on local[N]. All heavy Python
-work goes through Arrow-batched pandas UDFs, so Arrow settings matter.
+Designed for multi-executor clusters; tested on local[N]. Extraction runs
+in Python one Arrow batch at a time (``arrow_extract.extract_batch`` behind
+mapInArrow or a scalar arrow_udf; the other Python operators are pandas
+UDFs or mapInPandas), so the Arrow batch settings matter.
 """
 
 from __future__ import annotations

@@ -20,6 +20,19 @@ spark.sparkContext.setLogLevel("ERROR")
 import texoo_spark
 assert "texoo_spark.zip" in texoo_spark.__file__, texoo_spark.__file__
 
+
+# workers zip-import texoo_spark too, and importing it must replace the
+# per-task zipimporter.invalidate_caches (texoo_spark/__init__.py)
+def _worker_imports(_rows):
+    import zipimport
+    import texoo_spark
+    yield (texoo_spark.__file__, zipimport.zipimporter.invalidate_caches.__module__)
+
+
+seen = set(spark.sparkContext.parallelize(range(8), 8)
+           .mapPartitions(_worker_imports).collect())
+assert all("texoo_spark.zip" in f and m == "texoo_spark" for f, m in seen), seen
+
 from texoo_spark.pipeline import run_extraction
 import tempfile, os
 out = tempfile.mkdtemp(prefix="submit_out_")
