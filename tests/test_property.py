@@ -7,6 +7,7 @@ metric bounds, dedup determinism. Seeded and deadline-free for CI stability.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from texoo_spark import textops
@@ -19,7 +20,10 @@ SETTINGS = settings(max_examples=300, deadline=None, derandomize=True)
 # text alphabets: plain words, punctuation-heavy, whitespace-heavy, unicode
 _plain = st.text(alphabet="abc DEF 123 ", max_size=200)
 _punct = st.text(alphabet="ab.?!,;:()[]{}\"'- ", max_size=200)
-_ws = st.text(alphabet="ab \t\n\xa0", max_size=200)
+# every separator class the core handles: newline, CR, tab, VT, FF, the
+# U+001C-U+001F controls, NEL, NBSP, LINE SEPARATOR, IDEOGRAPHIC SPACE
+_ws = st.text(alphabet="ab \t\n\r\x0b\x0c\x1c\x1d\x1e\x1f\x85\xa0\u2028\u3000",
+              max_size=200)
 _uni = st.text(max_size=120)
 ANY_TEXT = st.one_of(_plain, _punct, _ws, _uni)
 
@@ -82,6 +86,31 @@ KERNEL_BATCH = st.lists(
     max_size=12)
 
 
+def _kernel_rows(texts, mode, strip_html_first=True):
+    import pyarrow as pa
+
+    from texoo_spark.arrow_extract import EXTRACT_COLUMNS, extract_batch
+    arrays = extract_batch(pa.array(texts, pa.string()), mode,
+                           strip_html_first)
+    return pa.StructArray.from_arrays(arrays,
+                                      names=EXTRACT_COLUMNS).to_pylist()
+
+
+def _reference_row(text, mode, strip_html_first=True):
+    """(kernel row, token surfaces) for one text by the reference twin."""
+    from texoo_spark.html import looks_like_html, strip_html
+    text = text or ""
+    if strip_html_first and looks_like_html(text):
+        text = strip_html(text)["main_text"]
+    toks, begins, ends, sents, extracted = textops.extract_arrays(text, mode)
+    return {"extracted_text": extracted, "n_sentences": len(sents),
+            "n_tokens": len(toks), "tok_begin": begins, "tok_end": ends,
+            "sent_begin": [s[0] for s in sents],
+            "sent_end": [s[1] for s in sents],
+            "sent_tok_start": [s[2] for s in sents],
+            "sent_tok_end": [s[3] for s in sents]}, toks
+
+
 @SETTINGS
 @given(KERNEL_BATCH, st.sampled_from([textops.KEEP, textops.DISCARD]),
        st.booleans())
@@ -90,30 +119,36 @@ def test_kernel_matches_reference(texts, mode, strip_html_first):
     the reference twin textops.extract_arrays, row by row; token surfaces
     must come back out of extracted_text at offset - tok_begin[0] (the
     recipe extract_turns evaluates on the JVM)."""
-    import pyarrow as pa
-
-    from texoo_spark.arrow_extract import EXTRACT_COLUMNS, extract_batch
-    from texoo_spark.html import looks_like_html, strip_html
-    arrays = extract_batch(pa.array(texts, pa.string()), mode,
-                           strip_html_first)
-    got = pa.StructArray.from_arrays(arrays, names=EXTRACT_COLUMNS)
+    got = _kernel_rows(texts, mode, strip_html_first)
     assert len(got) == len(texts)
-    for text, row in zip(texts, got.to_pylist()):
-        text = text or ""
-        if strip_html_first and looks_like_html(text):
-            text = strip_html(text)["main_text"]
-        toks, begins, ends, sents, extracted = textops.extract_arrays(
-            text, mode)
-        assert row == {
-            "extracted_text": extracted, "n_sentences": len(sents),
-            "n_tokens": len(toks), "tok_begin": begins, "tok_end": ends,
-            "sent_begin": [s[0] for s in sents],
-            "sent_end": [s[1] for s in sents],
-            "sent_tok_start": [s[2] for s in sents],
-            "sent_tok_end": [s[3] for s in sents]}
-        base = begins[0] if begins else 0
-        assert [extracted[b - base:e - base]
-                for b, e in zip(begins, ends)] == toks
+    for text, row in zip(texts, got):
+        expected, toks = _reference_row(text, mode, strip_html_first)
+        assert row == expected
+        base = row["tok_begin"][0] if toks else 0
+        assert [row["extracted_text"][b - base:e - base]
+                for b, e in zip(row["tok_begin"], row["tok_end"])] == toks
+
+
+@pytest.mark.parametrize("mode", [textops.KEEP, textops.DISCARD])
+def test_kernel_has_one_segmentation_path(monkeypatch, mode):
+    """The kernel never reaches the reference twin: with extract_arrays
+    made to raise, newline-run, CRLF, tab, NBSP, U+001C and HTML rows
+    still come out equal to the twin's rows computed beforehand."""
+    rows = ["a\n\n\nb. C d.\n\nE", "One.\r\nTwo\r\n\r\nthree",
+            "tab\tsep\t\tword.", "nb\xa0sp\xa0\xa0x. Y",
+            "unit\x1csep\x1d. Next\x1e\x1fend",
+            "<html><body><p>Main paragraph with enough words to be kept as"
+            " the main text.</p><p>Second\tparagraph with enough words to"
+            " be kept too.</p></body></html>"]
+    expected = [_reference_row(t, mode)[0] for t in rows]
+    assert all(r["n_tokens"] for r in expected)
+    assert expected[-1]["n_sentences"] == 2     # both HTML paragraphs kept
+
+    def twin(*_a, **_k):
+        raise AssertionError("kernel reached the reference twin")
+
+    monkeypatch.setattr(textops, "extract_arrays", twin)
+    assert _kernel_rows(rows, mode) == expected
 
 
 @SETTINGS

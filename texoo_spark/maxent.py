@@ -24,8 +24,11 @@ code); the reference ships the identical bytes.
 The deterministic rule tokenizer (textops.tokenize_pos) remains the
 default hot path — it is fixture-exact and ~50x faster. This lane exists
 for model-faithful parity runs and as the arbiter for strings the rules
-were never designed for. tests/test_maxent.py pins golden behaviors and
-the reference JUnit fixtures through this lane.
+were never designed for; it brings only the two models (the tokenizer and
+the sentence decision) and runs them through textops' reference twin
+extract_arrays, which owns the KEEP/DISCARD assembly and reconstruction.
+tests/test_maxent.py pins golden behaviors and the reference JUnit
+fixtures through this lane.
 """
 
 from __future__ import annotations
@@ -333,47 +336,15 @@ def maxent_sent_pos_detect(s: str) -> list[tuple[int, int]]:
 def maxent_extract_document(text: str, newlines: str | None = None):
     """Full extraction (sentences + tokens + reconstruction) through BOTH
     real OpenNLP models — the model-faithful parity lane mirroring
-    DocumentFactory.fromText end to end."""
+    DocumentFactory.fromText end to end: the reference twin
+    textops.extract_arrays with the model tokenizer and sentence decision."""
     from texoo_spark import textops
-
-    nl = newlines or textops.DISCARD
-    keep = nl == textops.KEEP
-    texts: list[str] = []
-    begins: list[int] = []
-    ends: list[int] = []
-    sentences: list[tuple[int, int, int, int]] = []
-    count_newlines = 0
-    nl_offset = 0
-    for sb, se in maxent_sent_pos_detect(text):
-        sent_text = text[sb:se]
-        tok_start = len(texts)
-        for tb, te in maxent_tokenize_pos(sent_text):
-            tok_text = sent_text[tb:te]
-            if tok_text == "\n":
-                count_newlines += 1
-                if keep:
-                    texts.append(tok_text)
-                    begins.append(sb - nl_offset + tb)
-                    ends.append(sb - nl_offset + te)
-                elif count_newlines > 1:
-                    nl_offset += 1
-            else:
-                texts.append(tok_text)
-                begins.append(sb - nl_offset + tb)
-                ends.append(sb - nl_offset + te)
-                count_newlines = 0
-        n = len(texts)
-        if n > tok_start:
-            sentences.append((begins[tok_start], ends[-1], tok_start, n))
-        else:
-            sentences.append((0, 0, tok_start, tok_start))
-    extracted = textops._arrays_to_text(texts, begins, ends,
-                                        begins[0] if begins else 0)
-    tokens = [textops.Token(t, b, e)
-              for t, b, e in zip(texts, begins, ends)]
-    return textops.ExtractedDoc(tokens,
-                                [textops.SentenceSpan(*sp)
-                                 for sp in sentences], extracted)
+    texts, begins, ends, sents, extracted = textops.extract_arrays(
+        text, newlines or textops.DISCARD, maxent_tokenize_pos,
+        maxent_split_decision)
+    return textops.ExtractedDoc(
+        [textops.Token(*t) for t in zip(texts, begins, ends)],
+        [textops.SentenceSpan(*sp) for sp in sents], extracted)
 
 
 def maxent_tokenize_pos(text: str,

@@ -17,8 +17,12 @@ regex routines designed to run inside Arrow-batched Python UDFs:
 - offset-faithful text reconstruction
   (ref: texoo-core/.../common/WordHelpers.java:113-137)
 
-Every function here is pure and deterministic; the Spark layer calls them
-from one Arrow-batched kernel (see arrow_extract.py).
+Every function here is pure and deterministic. ``extract_arrays_lean`` is
+the one segmentation core: the Arrow-batched kernel (arrow_extract.py) and
+the fused gazetteer count UDF call it for every text. ``extract_arrays``
+(and its object form ``extract_document``) is the independent reference
+twin the tests compare the core against; the maxent lane runs it with the
+real OpenNLP models.
 """
 
 from __future__ import annotations
@@ -158,19 +162,37 @@ def tokenize_pos(text: str) -> list[tuple[int, int]]:
 
     Mirrors TokenizerMENL.tokenizePosWithNewline (stage a + refinement).
     """
-    out: list[tuple[int, int]] = []
-    append = out.append
+    begins: list[int] = []
+    ends: list[int] = []
+    tokenize_pos_range(text, 0, len(text), begins, ends)
+    return list(zip(begins, ends))
+
+
+def tokenize_pos_range(text: str, sb: int, se: int,
+                       begins: list[int], ends: list[int]) -> None:
+    """Tokenize text[sb:se], appending spans in DOC coordinates to begins/
+    ends, without allocating the sentence substring (re pos/endpos
+    scanning: lookaheads and \\Z see text[sb:se] alone)."""
     abbrevs = ABBREVIATIONS
-    for m in _TOKSCAN.finditer(text):
+    ba = begins.append
+    ea = ends.append
+    for m in _TOKSCAN.finditer(text, sb, se):
         if m.lastindex is None:
-            append(m.span())
+            b, e = m.span()
+            ba(b)
+            ea(e)
         else:
             tok = m[1]
             if len(tok) < 2 or tok.isalnum() or tok in abbrevs:
-                append(m.span())
+                b, e = m.span()
+                ba(b)
+                ea(e)
             else:
+                out: list[tuple[int, int]] = []
                 _refine_token(tok, m.start(), out)
-    return out
+                for b, e in out:
+                    ba(b)
+                    ea(e)
 
 
 # ---------------------------------------------------------------------------
@@ -332,71 +354,68 @@ DISCARD = "DISCARD"
 _NONSPACE_WS = re.compile(r"[^\S ]")
 
 
-def tokenize_pos_range(text: str, sb: int, se: int,
-                       begins: list[int], ends: list[int]) -> None:
-    """tokenize_pos over text[sb:se] appending spans in DOC coordinates,
-    without allocating the sentence substring (re pos/endpos scanning).
-    Only exercised on text with no newline/tab/NBSP (the lean fast path),
-    so the forced-\\n-single alternative never fires here."""
-    abbrevs = ABBREVIATIONS
-    ba = begins.append
-    ea = ends.append
-    for m in _TOKSCAN.finditer(text, sb, se):
-        if m.lastindex is None:
-            b, e = m.span()
-            ba(b)
-            ea(e)
-        else:
-            tok = m[1]
-            if len(tok) < 2 or tok.isalnum() or tok in abbrevs:
-                b, e = m.span()
-                ba(b)
-                ea(e)
-            else:
-                out: list[tuple[int, int]] = []
-                _refine_token(tok, m.start(), out)
-                for b, e in out:
-                    ba(b)
-                    ea(e)
-
-
 def extract_arrays_lean(text: str, newlines: str = DISCARD):
-    """extract_arrays variant for sinks that do not store token surfaces:
-    returns (None, begins, ends, sentences, extracted) with begins/ends/
-    sentences/extracted IDENTICAL to extract_arrays, skipping all per-token
-    substring allocation. Falls back to the full routine when the text
-    contains newline/tab/NBSP (where KEEP/DISCARD offset algebra applies)."""
-    if _NONSPACE_WS.search(text) is not None:
-        return extract_arrays(text, newlines)
+    """The segmentation core, the one routine production extraction calls.
+    Returns (None, tok_begins, tok_ends, sentence_spans, extracted_text).
+
+    Mirrors DocumentFactory.addToDocumentFromText (java:228-267) in position
+    space: newline tokens are kept (KEEP) or dropped, shifting later offsets
+    left by one per extra newline of a run that may span sentences (DISCARD,
+    java:249-259). Plain-space text has no newline token, so its
+    reconstruction is the input slice [first begin, last end) and no token
+    surface is allocated; other text goes through _arrays_to_text."""
+    ws = _NONSPACE_WS.search(text) is not None
+    keep = newlines == KEEP
+    texts: list[str] = []    # token surfaces, collected only when ws
     begins: list[int] = []
     ends: list[int] = []
     sentences: list[tuple[int, int, int, int]] = []
+    count_newlines = 0
+    nl_offset = 0
     for sb, se in sent_pos_detect(text):
         tok_start = len(begins)
         tokenize_pos_range(text, sb, se, begins, ends)
+        if ws:
+            # KEEP/DISCARD algebra over this sentence's tokens, in place
+            w = tok_start
+            for r in range(tok_start, len(begins)):
+                b = begins[r]
+                e = ends[r]
+                if text[b] == "\n":
+                    count_newlines += 1
+                    if not keep:
+                        if count_newlines > 1:
+                            nl_offset += 1
+                        continue
+                else:
+                    count_newlines = 0
+                texts.append(text[b:e])
+                begins[w] = b - nl_offset
+                ends[w] = e - nl_offset
+                w += 1
+            del begins[w:]
+            del ends[w:]
         n = len(begins)
         if n > tok_start:
             sentences.append((begins[tok_start], ends[-1], tok_start, n))
         else:
             sentences.append((0, 0, tok_start, tok_start))
-    extracted = text[begins[0]:ends[-1]] if begins else ""
+    if ws:
+        extracted = _arrays_to_text(texts, begins, ends,
+                                    begins[0] if begins else 0)
+    else:
+        extracted = text[begins[0]:ends[-1]] if begins else ""
     return None, begins, ends, sentences, extracted
 
 
 def extract_arrays(text: str, newlines: str = DISCARD,
-                   doc_offset: int = 0):
-    """Segment raw text; array-form core (the Arrow-batch hot path).
-
-    Returns (tok_texts, tok_begins, tok_ends, sentence_spans,
-    extracted_text) using plain lists — no per-token object allocation.
-
-    Mirrors DocumentFactory.addToDocumentFromText (java:228-267): sentence
-    detection over the whole text, per-sentence tokenization, newline tokens
-    kept (KEEP) or dropped with offsets shifted left by the number of extra
-    consecutive newlines (DISCARD, java:249-259).
-    """
-    if doc_offset > 0:
-        doc_offset += 1
+                   tokenize=tokenize_pos, decision=None):
+    """Reference twin of extract_arrays_lean for differential tests and
+    the object form: the same algebra over sliced sentence and token
+    surfaces, always reconstructed by _arrays_to_text. Returns (tok_texts,
+    tok_begins, tok_ends, sentence_spans, extracted_text). ``tokenize``
+    (sentence -> spans) and ``decision`` (see sent_pos_detect) swap in other
+    models, as the maxent lane does with the OpenNLP ones."""
     keep = newlines == KEEP
     texts: list[str] = []
     begins: list[int] = []
@@ -404,74 +423,56 @@ def extract_arrays(text: str, newlines: str = DISCARD,
     sentences: list[tuple[int, int, int, int]] = []
     count_newlines = 0
     nl_offset = 0
-    for sb, se in sent_pos_detect(text):
+    for sb, se in sent_pos_detect(text, decision):
         sent_text = text[sb:se]
         tok_start = len(texts)
-        base = doc_offset + sb
-        for tb, te in tokenize_pos(sent_text):
+        for tb, te in tokenize(sent_text):
             tok_text = sent_text[tb:te]
             if tok_text == "\n":
                 count_newlines += 1
                 if keep:
                     texts.append(tok_text)
-                    begins.append(base - nl_offset + tb)
-                    ends.append(base - nl_offset + te)
+                    begins.append(sb - nl_offset + tb)
+                    ends.append(sb - nl_offset + te)
                 elif count_newlines > 1:
                     nl_offset += 1
             else:
                 texts.append(tok_text)
-                begins.append(base - nl_offset + tb)
-                ends.append(base - nl_offset + te)
+                begins.append(sb - nl_offset + tb)
+                ends.append(sb - nl_offset + te)
                 count_newlines = 0
         n = len(texts)
         if n > tok_start:
             sentences.append((begins[tok_start], ends[-1], tok_start, n))
         else:
             sentences.append((0, 0, tok_start, tok_start))
-    # reconstruction fast path: with no whitespace other than plain spaces
-    # (tabs/newlines/NBSP would be emitted as ' ' and shift nothing here),
-    # offsets are faithful to the input, so the reconstruction is exactly
-    # the input slice covering [first token begin, last token end).
-    if begins and doc_offset == 0 and _NONSPACE_WS.search(text) is None:
-        extracted = text[begins[0]:ends[-1]]
-    else:
-        extracted = _arrays_to_text(texts, begins, ends,
-                                    begins[0] if begins else 0)
+    extracted = _arrays_to_text(texts, begins, ends,
+                                begins[0] if begins else 0)
     return texts, begins, ends, sentences, extracted
 
 
 def _arrays_to_text(texts: list[str], begins: list[int], ends: list[int],
                     begin_offset: int) -> str:
     """tokens_to_text over parallel arrays (WordHelpers.java:113-137).
-    Our tokenizer guarantees len(word) == end-begin, so the truncate/pad
-    branches of the reference reduce to direct appends; the gap/resync
-    logic is kept in full."""
+    Every caller passes surfaces with len(word) == end-begin, so the
+    reference's truncate/pad branches are dropped; the gap/resync logic is
+    kept in full."""
     parts: list[str] = []
     cursor = begin_offset
     for word, b, e in zip(texts, begins, ends):
-        if not word:
-            continue
         if cursor > b:
             parts.append(" ")
         elif cursor < b:
             parts.append(" " * (b - cursor))
-        length = e - b
-        if length == len(word):
-            parts.append(word)
-        elif length < len(word):
-            parts.append(word[:length])
-        else:
-            parts.append(word + " " * (length - len(word)))
+        parts.append(word)
         cursor = e
     return "".join(parts)
 
 
-def extract_document(text: str, newlines: str = DISCARD,
-                     doc_offset: int = 0) -> ExtractedDoc:
+def extract_document(text: str, newlines: str = DISCARD) -> ExtractedDoc:
     """Segment raw text into sentences and tokens with char offsets
-    (object-form wrapper over extract_arrays; see there for semantics)."""
-    texts, begins, ends, sents, extracted = extract_arrays(
-        text, newlines, doc_offset)
+    (object-form wrapper over the reference twin extract_arrays)."""
+    texts, begins, ends, sents, extracted = extract_arrays(text, newlines)
     tokens = [Token(t, b, e) for t, b, e in zip(texts, begins, ends)]
     sentences = [SentenceSpan(*s) for s in sents]
     return ExtractedDoc(tokens, sentences, extracted)

@@ -1,4 +1,4 @@
-"""Additional Arrow-batched pandas UDFs (HTML, PDF, spans, quality)."""
+"""Additional Arrow-batched pandas UDFs (HTML, spans, quality)."""
 
 from __future__ import annotations
 
@@ -27,22 +27,6 @@ def strip_html_text_udf(texts: pd.Series) -> pd.Series:
     from texoo_spark.html import strip_html
     return pd.Series([strip_html(t or "")["main_text"] for t in texts],
                      dtype="object")
-
-
-@pandas_udf(StringType())
-def pdf_layout_text_udf(boxes: pd.Series) -> pd.Series:
-    """Reading-order text from an array<struct<page,x0,y0,x1,y1,text>> column."""
-    from texoo_spark.pdfops import WordBox, layout_text
-    out = []
-    for rows in boxes:
-        if rows is None:
-            out.append("")
-            continue
-        words = [WordBox(int(r["page"]), float(r["x0"]), float(r["y0"]),
-                         float(r["x1"]), float(r["y1"]), str(r["text"]))
-                 for r in rows]
-        out.append(layout_text(words))
-    return pd.Series(out, dtype="object")
 
 
 def make_gazetteer_count_udf(terms: list[str],
